@@ -23,26 +23,27 @@ FEED_SESSIONS = 10
 FEED_FILES = 16
 
 
-def _sessions(rng, users, sessions_per_user):
+def _sessions(rng, users, sessions_per_user, days):
     """One row per (user, session): start time and event count.
 
     Session starts fall in [00:00, 23:15] of their day so no session
-    crosses midnight, and at most one session per user per 3-day slot,
-    so the sequence and consistency gate checks pass.
+    crosses midnight, and at most one session per user per slot of
+    days / sessions_per_user days (3 in the 30-day feed), so the
+    sequence and consistency gate checks pass.
     """
     n = users * sessions_per_user
     user = np.repeat(np.arange(users, dtype=np.int64), sessions_per_user)
     slot = np.tile(np.arange(sessions_per_user, dtype=np.int64), users)
-    slot_days = DAYS / sessions_per_user
+    slot_days = days / sessions_per_user
     day = np.floor(slot * slot_days + rng.random(n) * slot_days).astype(np.int64)
-    day = np.minimum(day, DAYS - 1)
+    day = np.minimum(day, days - 1)
     second = rng.integers(0, 23 * 3600 + 15 * 60, n)
     start_us = day * DAY_US + second * 1_000_000 + rng.integers(0, 1_000_000, n)
     n_events = rng.integers(2, 8, n)
     return user, slot, start_us, n_events
 
 
-def session_feed(seed, users=FEED_USERS, sessions_per_user=FEED_SESSIONS):
+def session_feed(seed, users=FEED_USERS, sessions_per_user=FEED_SESSIONS, days=DAYS):
     """Funnel-ordered session events that pass all seven gate checks.
 
     Every session opens with a view; a purchase can only close a
@@ -50,7 +51,7 @@ def session_feed(seed, users=FEED_USERS, sessions_per_user=FEED_SESSIONS):
     Returns a dict of numpy columns sorted by ts.
     """
     rng = np.random.default_rng(seed)
-    user, slot, start_us, n_events = _sessions(rng, users, sessions_per_user)
+    user, slot, start_us, n_events = _sessions(rng, users, sessions_per_user, days)
     total = int(n_events.sum())
     sid = np.repeat(np.arange(len(user), dtype=np.int64), n_events)
     first = np.cumsum(n_events) - n_events

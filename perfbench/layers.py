@@ -15,8 +15,10 @@ import statistics
 
 MARTS = ["mart_user_daily", "mart_funnel_daily", "mart_product_daily", "mart_orders",
          "session_sequences", "hourly_traffic", "quality_check_log"]
-MODULES = ["Relational", "EventMarts", "Quality", "Sessionize", "Basket", "Graph",
-           "Similarity", "TextAnalysis", "Dedup", "UserAnalytics", "Multimodal", "AsOfJoin"]
+# the operators modules that own a name in registry_mix.txt (Basket and
+# Graph own none of the listed names)
+MODULES = ["Relational", "EventMarts", "Quality", "Sessionize", "Similarity", "TextAnalysis",
+           "Dedup", "UserAnalytics", "Multimodal", "AsOfJoin"]
 STREAMS = ["funnel", "traffic", "quality", "unique"]
 
 NAMES = (["GraftSession.start_s",
@@ -30,19 +32,16 @@ NAMES = (["GraftSession.start_s",
             "Pipeline.shuffle_bytes", "Pipeline.spill_bytes",
             "query.plan_s", "query.exec_s", "query.jobs", "query.plan_jobs"]
          + [f"{m}.s" for m in MODULES]
+         + [f"streaming.{q}.{k}" for q in STREAMS
+            for k in ("trigger_ms", "addBatch_ms", "walCommit_ms", "state_rows", "input_rows")]
          + ["jvm.gc_s", "jvm.heap_peak_mb",
             "trace.attributed_share", "trace.primary_s", "trace.secondary_s"])
-# stream_replay only: it is not one of BENCHMARK.json's workloads
-STREAM_NAMES = [f"streaming.{q}.{k}" for q in STREAMS
-                for k in ("trigger_ms", "addBatch_ms", "walCommit_ms", "state_rows", "input_rows")]
 
 UNITS = {"_s": "s", ".s": "s", "_ms": "ms", "_bytes": "bytes", "bytes_read": "bytes", "bytes_written": "bytes",
          "_mb": "MB", "ratio": "ratio", "share": "ratio", "byte": "ratio"}
 
-PRIMARY = {"nightly_full": "nightly", "daily_catchup": "daily", "registry_mix": "query",
-           "stream_replay": "drain"}
-SECONDARY = {"nightly_full": "nightly", "daily_catchup": "rerun", "registry_mix": "query",
-             "stream_replay": "drain"}
+PRIMARY = {"daily_catchup": "daily", "registry_mix": "query", "stream_replay": "drain"}
+SECONDARY = {"daily_catchup": "rerun", "registry_mix": "query", "stream_replay": "drain"}
 
 
 def unit(name):
@@ -120,7 +119,7 @@ class Trace:
         return [i for i in items if i["call"] is c]
 
 
-def _pipeline(tr, calls, date_rows, total_rows):
+def _pipeline(tr, calls, date_rows):
     per = []
     for c in calls:
         jobs = tr.in_call(tr.jobs, c)
@@ -138,8 +137,7 @@ def _pipeline(tr, calls, date_rows, total_rows):
         m["sources.rows_read"] = sum(x["scan_rows"] for x in execs)
         m["sources.bytes_read"] = sum(x["scan_bytes"] for x in execs)
         m["sources.scan_tasks"] = sum(x["scan_tasks"] for x in execs)
-        label = c["label"].split("#")[0]
-        scope = total_rows if label == "full" else sum(date_rows.get(d, 0) for d in _neighbors(label))
+        scope = sum(date_rows.get(d, 0) for d in _neighbors(c["label"].split("#")[0]))
         m["sources.scope_ratio"] = scope / m["sources.rows_read"] if m["sources.rows_read"] else 0.0
         m["Quality.gate_s"] = layer_s("Quality.gate")
         m["Quality.gate_jobs"] = len(layer_jobs("Quality.gate"))
@@ -176,7 +174,9 @@ def _neighbors(day):
 
 
 def _registry(tr, passes):
-    """Per timed list: sums over its queries, averaged over the passes."""
+    """Per pass over the timed names: sums over its queries, averaged
+    over the passes. `<Module>.s` is the SQL execution time of the
+    queries whose listed module it is."""
     calls = tr.calls_of("query")
     if not passes:
         return {}
@@ -191,9 +191,8 @@ def _registry(tr, passes):
         m["query.exec_s"] += (c["end"] - c["start"]) / 1e3 - plan
         m["query.jobs"] += len(jobs)
         m["query.plan_jobs"] += sum(1 for j in jobs if j["start"] < mark)
-        for x in execs:
-            if f"{x['layer']}.s" in mod:
-                mod[f"{x['layer']}.s"] += (x["end"] - x["start"]) / 1e3
+        if f"{c['module']}.s" in mod:
+            mod[f"{c['module']}.s"] += sum(x["end"] - x["start"] for x in execs) / 1e3
     out = {k: v / passes for k, v in m.items()}
     out.update({k: v / passes for k, v in mod.items()})
     return out
@@ -213,12 +212,14 @@ def _streaming(progress):
     return out
 
 
-def metrics(rec, workload, date_rows=None, total_rows=0):
+def metrics(rec, workload, date_rows, e2e):
+    """Every per-layer metric of a traced run; `e2e` holds the run's
+    primary_s and secondary_s, reported as trace.* for the overhead."""
     tr = Trace(rec)
-    m = {n: 0.0 for n in NAMES + (STREAM_NAMES if workload == "stream_replay" else [])}
+    m = {n: 0.0 for n in NAMES}
     m["GraftSession.start_s"] = _med(rec["session_s"])
-    if workload in ("nightly_full", "daily_catchup"):
-        m.update(_pipeline(tr, tr.calls_of(PRIMARY[workload]), date_rows or {}, total_rows))
+    if workload == "daily_catchup":
+        m.update(_pipeline(tr, tr.calls_of(PRIMARY[workload]), date_rows or {}))
     if workload == "registry_mix":
         m.update(_registry(tr, len(rec["secondary"])))
     if workload == "stream_replay":
@@ -230,6 +231,6 @@ def metrics(rec, workload, date_rows=None, total_rows=0):
     total = sum(j["end"] - j["start"] for j in jobs)
     placed = sum(j["end"] - j["start"] for j in jobs if j["layer"] != "unattributed")
     m["trace.attributed_share"] = placed / total if total else 1.0
-    m["trace.primary_s"] = _med(rec["primary"])
-    m["trace.secondary_s"] = _med(rec["secondary"])
+    m["trace.primary_s"] = e2e["primary_s"]
+    m["trace.secondary_s"] = e2e["secondary_s"]
     return {k: {"value": float(v), "unit": unit(k)} for k, v in m.items()}

@@ -35,9 +35,10 @@ object Harness {
   /** A timed call during which the VM lost more than this share of its
     * CPU time to the hypervisor (steal) measured the host, not the
     * program: its sample is kept apart, and the run makes another call
-    * in its place, up to MaxContended such calls. */
+    * in its place, up to MaxContended times (once: each replacement
+    * lengthens the run by a whole call). */
   val MaxSteal = 0.01
-  val MaxContended = 3
+  val MaxContended = 1
 
   /** (steal, total) jiffies over all CPUs, from /proc/stat. */
   def cpuJiffies(): (Long, Long) = {
@@ -47,6 +48,10 @@ object Harness {
       (if (f.length > 7) f(7) else 0L, f.sum)
     } finally src.close()
   }
+
+  /** Whether steal between two /proc/stat readings exceeded MaxSteal. */
+  def contended(j0: (Long, Long), j1: (Long, Long)): Boolean =
+    (j1._1 - j0._1).toDouble / math.max(1L, j1._2 - j0._2) > MaxSteal
 
   /** Wall times of one kind of call; contended samples are reported
     * only when the run has no clean one. */
@@ -82,21 +87,23 @@ object Harness {
       val res = try Right(body) catch { case e: Throwable => Left(s"${e.getClass.getName}: ${e.getMessage}") }
       val wall = (System.nanoTime() - n0) / 1e9
       val j1 = cpuJiffies()
-      lastContended = (j1._1 - j0._1).toDouble / math.max(1L, j1._2 - j0._2) > MaxSteal
+      lastContended = contended(j0, j1)
       calls += Call(kind, label, module, t0, System.currentTimeMillis(), mark)
       res.flatMap(r => ok(r).toLeft(r)) match {
         case Right(r) =>
-          if (timedCall && lastContended) contendedCalls += 1
-          else if (timedCall) timed += wall
+          if (timedCall) account(wall, lastContended)
           Some((r, wall))
         case Left(msg) =>
           failures += s"$kind $label: ${msg.take(300)}"
           None
       }
     }
+    /** Count a timed sample: measured time when clean, else a contended call. */
+    def account(wall: Double, hit: Boolean): Unit = if (hit) contendedCalls += 1 else timed += wall
+
     // a workload that keeps failing, or a host that keeps stealing the
     // CPU, stops the run instead of running it to the deadline
-    def gaveUp: Boolean = failures.size >= 10 || contendedCalls >= MaxContended
+    def gaveUp: Boolean = failures.size >= 10 || contendedCalls > MaxContended
     def done: Boolean = timed >= seconds || gaveUp
 
     /** Another call of a kind is due: none has succeeded yet, or the run
@@ -151,7 +158,6 @@ object Harness {
       "launch_to_main_s" -> (mainMs - a("launched-ms").toLong) / 1e3,
       "session_s" -> sessionS, "canary_start" -> canaryStart)
     val result = workload match {
-      case "nightly_full" => nightly(spark, run, data, work, trace)
       case "daily_catchup" => daily(spark, run, data, work, trace)
       case "registry_mix" => registryMix(spark, run, data, work, registry.get, a("seed").toLong, trace)
       case "stream_replay" => stream(spark, run, data, work, streamNames)
@@ -194,9 +200,11 @@ object Harness {
     Map("jvm_gc_s" -> gc, "jvm_heap_peak_mb" -> heap, "peak_rss_mb" -> hwm)
   }
 
-  private def readRegistry(path: String): Seq[(String, String)] = {
+  /** The listed registry names: (name, module, timed). */
+  private def readRegistry(path: String): Seq[(String, String, Boolean)] = {
     val rows = scala.io.Source.fromFile(path).getLines().map(_.trim)
-      .filter(l => l.nonEmpty && !l.startsWith("#")).map(_.split("\\s+")).map(r => (r(0), r(1))).toSeq
+      .filter(l => l.nonEmpty && !l.startsWith("#")).map(_.split("\\s+"))
+      .map(r => (r(0), r(1), r.lift(2).contains("timed"))).toSeq
     val missing = rows.map(_._1).filterNot(SparkEntry.queries.contains)
     require(missing.isEmpty, s"registry names no longer registered: ${missing.mkString(", ")}")
     rows
@@ -261,44 +269,18 @@ object Harness {
     s"${r.getLong(0)}:${r.get(1)}"
   }
 
-  def nightly(spark: SparkSession, run: Run, data: String, work: String,
-      trace: Boolean): Map[String, Any] = {
-    val warm = s"$work/nightly_warm"
-    val warmup = run.call("warmup", "full", timedCall = false)(
-      pipelineRun(spark, s"$data/feed", warm, Nil))(pipelineOk).map(_._2)
-    delete(warm)
-    val samples = new Samples
-    var last: Option[String] = None
-    var i = 0
-    while (!run.done) {
-      val dir = s"$work/nightly_$i"
-      pipelineCall(spark, run, "nightly", s"full#$i", feedFor(data, i), dir, Nil, trace) match {
-        case Some(wall) =>
-          samples.add(wall, run.lastContended)
-          last.foreach(delete)
-          last = Some(dir)
-        case None => delete(dir)
-      }
-      i += 1
-    }
-    last.foreach { dir => checkLog(spark, run, s"$dir/quality_check_log") }
-    Map("warmup_s" -> warmup.getOrElse(0.0), "primary" -> samples.reported,
-      "secondary" -> samples.reported, "mart_dir" -> last.getOrElse(""), "oracle" -> martOracle)
-  }
-
   /** The registry query of each mart's name, whose oracle SQL the mart
     * is compared with. */
   private def martOracle: Seq[Map[String, String]] =
     Marts.map(m => Map("name" -> m, "sql" -> SparkEntry.oracleSql(m), "drop" -> Partition(m)))
 
   /** The check log holds seven rows per logged date, all PASS for the
-    * dates of successful calls (`passed`; None: every logged date). */
-  private def checkLog(spark: SparkSession, run: Run, dir: String,
-      passed: Option[Seq[String]] = None): Unit = {
+    * dates of successful calls. */
+  private def checkLog(spark: SparkSession, run: Run, dir: String, passed: Seq[String]): Unit = {
     val log = spark.read.parquet(dir)
     val perDate = log.groupBy("run_date").agg(count(lit(1)).as("n"),
       count(when(col("status") =!= "PASS", 1)).as("bad"))
-    val mustPass = passed.fold(lit(true))(ds => col("run_date").isin(ds.map(java.sql.Date.valueOf): _*))
+    val mustPass = col("run_date").isin(passed.map(java.sql.Date.valueOf): _*)
     val bad = perDate.filter(col("n") =!= 7 || (mustPass && col("bad") > 0)).count()
     run.check(bad == 0 && perDate.count() > 0, s"quality_check_log: $bad bad dates")
   }
@@ -336,7 +318,7 @@ object Harness {
     val after = outputs(outDir).map(m => m -> fingerprint(spark.read.parquet(s"$outDir/$m"))).toMap
     run.check(before == after,
       s"rerun changed marts: ${before.keys.filter(k => before.get(k) != after.get(k)).mkString(",")}")
-    checkLog(spark, run, s"$outDir/quality_check_log", Some(built.toSeq))
+    checkLog(spark, run, s"$outDir/quality_check_log", built.toSeq)
     // run.py compares each built date's partitions of the five
     // non-session marts with the same dates of the full-history oracle
     Map("warmup_s" -> warmup.getOrElse(0.0), "primary" -> first.reported,
@@ -348,8 +330,8 @@ object Harness {
   // ---------------------------------------------------------------- registry
 
   def registryMix(spark: SparkSession, run: Run, data: String, work: String,
-      names: Seq[(String, String)], seed: Long, trace: Boolean): Map[String, Any] = {
-    def query(name: String, module: String, kind: String, timedCall: Boolean) = {
+      names: Seq[(String, String, Boolean)], seed: Long, trace: Boolean): Map[String, Any] = {
+    def query(name: String, module: String, kind: String) = {
       Caches.clearAll() // cold: no memo carried over from another query
       val s = spark.newSession()
       if (trace) {
@@ -361,27 +343,30 @@ object Harness {
           def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
         })
       }
-      run.call(kind, name, module, timedCall) {
+      run.call(kind, name, module, timedCall = false) {
         val df = SparkEntry.queries(name)(s, data)
         run.mark = System.currentTimeMillis()
         df.write.format("noop").mode("overwrite").save()
-      }(_ => None).map(r => (r._2, run.lastContended))
+      }(_ => None).map(_._2)
     }
-    // every twelfth listed name is timed: the whole list takes over a
-    // minute per pass on four cores; four names leave room for a
-    // warm-up pass and several timed passes in a run
-    val timed = names.zipWithIndex.collect { case (nm, i) if i % 12 == 0 => nm }
-    val warmup = timed.flatMap { case (n, m) => query(n, m, "warmup", timedCall = false) }.map(_._1).sum
+    // the whole list takes over a minute per pass on four cores, so
+    // only the names marked `timed` (one per module) are timed: that
+    // leaves room for a warm-up pass and several timed passes in a run
+    val timed = names.collect { case (n, m, true) => (n, m) }
+    val warmup = timed.flatMap { case (n, m) => query(n, m, "warmup") }.sum
     val perQuery = timed.map(_._1 -> new Samples).toMap
     val passes = new Samples
+    // steal is judged per pass: a single query's call is too short for
+    // the jiffy counts to tell a contended call from a clean one
     while (!run.done) {
-      val p0 = System.nanoTime()
-      val times = timed.map { case (n, m) => n -> query(n, m, "query", timedCall = true) }
-      if (times.forall(_._2.nonEmpty)) passes.add((System.nanoTime() - p0) / 1e9, times.exists(_._2.exists(_._2)))
-      for ((n, t) <- times; (wall, hit) <- t) perQuery(n).add(wall, hit)
+      val j0 = cpuJiffies(); val p0 = System.nanoTime()
+      val times = timed.map { case (n, m) => n -> query(n, m, "query") }
+      val (wall, hit) = ((System.nanoTime() - p0) / 1e9, contended(j0, cpuJiffies()))
+      if (times.forall(_._2.nonEmpty)) { passes.add(wall, hit); run.account(wall, hit) }
+      for ((n, t) <- times; w <- t) perQuery(n).add(w, hit)
     }
     // one value per timed name, its median: a median over the pooled
-    // calls of four different queries would jump between them
+    // calls of different queries would jump between them
     def median(xs: Seq[Double]) = { val v = xs.sorted; (v((v.size - 1) / 2) + v(v.size / 2)) / 2 }
     // output for the oracle compare, outside the timed calls: one name
     // with oracle SQL per run, rotating through the list by seed
@@ -393,7 +378,8 @@ object Harness {
         Some(Map("name" -> n, "sql" -> SparkEntry.oracleSql(n), "dir" -> dir))
       } catch { case e: Throwable => run.check(false, s"$n: output write failed: ${e.getMessage}"); None }
     }
-    Map("warmup_s" -> warmup, "primary" -> perQuery.values.map(_.reported).filter(_.nonEmpty).map(median).toSeq,
+    val perName = perQuery.collect { case (n, q) if !q.isEmpty => n -> median(q.reported) }
+    Map("warmup_s" -> warmup, "primary" -> perName.values.toSeq, "per_query" -> perName,
       "secondary" -> passes.reported, "oracle" -> oracle)
   }
 
